@@ -17,8 +17,8 @@ Faithful re-expression of the reference's event loop
 
 Two physical strategies:
 
-1. ``compile_two_step_sequence`` (relational.py) — pure window-function plan
-   for the common 2-group sequence+timeout rule. No Python in the hot path;
+1. ``compile_sequence`` (relational.py) — pure window-function plan
+   for sequence+timeout rules. No Python in the hot path;
    one shuffle on the key; scales to arbitrary data.
 2. ``correlate_state_machine`` — general path: ``applyInPandas`` running the
    state machine per key. Python, but Arrow-batched and embarrassingly

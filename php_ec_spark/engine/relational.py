@@ -376,11 +376,6 @@ def compile_sequence(events: DataFrame, rule: Rule) -> DataFrame:
     return out
 
 
-def compile_two_step_sequence(events: DataFrame, rule: Rule) -> DataFrame:
-    """Backwards-compatible alias: 2-step is the N-step plan with no joins."""
-    return compile_sequence(events, rule)
-
-
 def plan_report(rules, historical: bool = False) -> dict[str, str]:
     """Which physical strategy each rule compiles to — the ``.explain()``
     of the rule compiler. Keys are rule names; values are one of

@@ -16,8 +16,11 @@ SAME `EngineCore` semantics continuously via ``applyInPandasWithState``:
   max-seen event time minus the allowed disorder.
 
 Scale: state is partitioned by correlation key exactly like the batch
-path; a micro-batch shuffles only its own rows; state store IO is
-incremental (RocksDB provider recommended on a real cluster).
+path; a micro-batch shuffles only its own rows. Keep the default
+HDFS-backed state store provider for live CEP: at CEP-sized state
+(hundreds of keys, KB blobs) RocksDB measured ~2x the commit cost and
+~15% lower catch-up eps (tools/live_profile.py's ``rocksdb`` row); it
+pays off only once key cardinality reaches millions.
 
 Live-path cost model (re-profiled round 6, tools/live_profile*.py —
 this CORRECTS round 5's "~0.5 s per state partition per batch"):
@@ -57,7 +60,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from ..rules.base import EVENT_MATCH_ANY, Rule
+from ..rules.base import Rule
 from .batch import EMISSION_SCHEMA, check_unique_rule_names
 from .batch import _OUT_COLS as _OUT_COLS_LIST
 from .core import EngineCore
@@ -65,15 +68,81 @@ from .core import EngineCore
 #: State persisted per correlation key: the serialized EngineCore.
 STATE_SCHEMA = T.StructType([T.StructField("blob", T.StringType())])
 
+#: Schema of a warm-start snapshot row (what :func:`snapshot_state` emits
+#: and what ``correlate_stream(initial_state=...)`` expects).
+SNAPSHOT_SCHEMA = "__key STRING, blob STRING"
+
 # one source of truth with the batch engine (both must track
 # EMISSION_SCHEMA's field order)
 _OUT_COLS = tuple(_OUT_COLS_LIST)
 _DT64NS = np.dtype("datetime64[ns]")
 
 
+def _group_rules(
+    rules: Sequence[Rule], clock: str = "event"
+) -> dict[Optional[str], list[Rule]]:
+    """Validate a live rule set and group it by correlation key column.
+
+    Every live entry point calls this before its first side effect
+    (memory bind, snapshot job, kick spool write), so a bad argument
+    fails before anything is anchored to the wrong checkpoint."""
+    if not rules:
+        raise ValueError("correlate_stream needs at least one rule")
+    if clock not in ("event", "processing"):
+        # a typo must not silently pick one of the two timer semantics
+        raise ValueError(
+            f"clock must be 'event' or 'processing', got {clock!r}"
+        )
+    check_unique_rule_names(rules)
+    by_key: dict[Optional[str], list[Rule]] = {}
+    for r in rules:
+        by_key.setdefault(r.key, []).append(r)
+    return by_key
+
+
+def _single_key_group(
+    rules: Sequence[Rule], clock: str = "event"
+) -> Tuple[Optional[str], list[Rule]]:
+    """(key column, rules) of a rule set that one streaming query runs."""
+    by_key = _group_rules(rules, clock)
+    if len(by_key) > 1:
+        # Spark allows only ONE applyInPandasWithState per streaming query
+        # (UnsupportedOperationChecker: "Multiple applyInPandasWithStates
+        # are not supported") — a union of stateful ops would fail at
+        # query.start(). Run one streaming query per key column instead.
+        raise ValueError(
+            "streaming rules must share one correlation key column per "
+            f"query (got {sorted(map(str, by_key))}); start a separate "
+            "correlate_stream/start_correlation per key column"
+        )
+    (key_col, group_rules), = by_key.items()
+    return key_col, group_rules
+
+
+def _key_projection(events: DataFrame, key_col: Optional[str]) -> DataFrame:
+    """``__key`` plus the engine columns — the ONE place the state key is
+    built, shared by the live stream and :func:`snapshot_state` so restore
+    blobs always find their live key.
+
+    The key is the SPARK-cast string (what the batch engine uses too), so
+    restore-blob lookup, emission keys and payload callbacks agree for
+    every key type — str(True) is "True" but CAST(true AS STRING) is
+    "true", and bool/decimal/timestamp keys would otherwise skip their
+    restore silently. Keyless rules group on the literal ``"__all__"``.
+    Aliasing also means a key that IS an engine column (e.g. event_type)
+    never selects twice."""
+    key_expr = (
+        F.col(key_col).cast("string")
+        if key_col is not None
+        else F.lit("__all__")
+    )
+    return events.select(
+        key_expr.alias("__key"), "event_id", "ts", "event_type", "value"
+    )
+
+
 def _make_stateful_handler(
     rules: Sequence[Rule],
-    historical: bool,
     clock: str,
     keyless: bool = False,
     restore_bc=None,
@@ -120,7 +189,7 @@ def _make_stateful_handler(
         # keyless rules group on a synthetic constant — their emissions must
         # carry key=NULL exactly like the batch engine, not the constant
         core = EngineCore.from_state(
-            rules, None if keyless else key[0], blob, historical=historical
+            rules, None if keyless else key[0], blob
         )
 
         if state.hasTimedOut:
@@ -202,8 +271,6 @@ def correlate_stream(
     events: DataFrame,
     rules: Sequence[Rule],
     watermark_delay: str = "0 seconds",
-    historical: bool = False,
-    prefilter_types: bool = False,
     clock: str = "event",
     initial_state: Optional[DataFrame] = None,
     memory_path: Optional[str] = None,
@@ -235,8 +302,8 @@ def correlate_stream(
     save-state file, done properly.
 
     ``initial_state`` warm-starts the state store from a batch snapshot
-    (``engine.streaming_tws.snapshot_state`` output: ``__key string, blob
-    string``): the reference's restore-savefile-then-go-live boot sequence
+    (:func:`snapshot_state` output: ``__key string, blob string``): the
+    reference's restore-savefile-then-go-live boot sequence
     (Scheduler.php:695-947). The snapshot is collected and broadcast —
     driver-sized, exactly like the reference's single gzip-JSON save file
     (FileAdapter.php:73-233); a restored key's instances resume on its
@@ -245,31 +312,16 @@ def correlate_stream(
     never fires its pending timeouts — touch every restored key by
     injecting one in-band ``CONTROL_MSG_RESTORED`` kick row per key into
     the source (the reference does the same at boot, Scheduler.php:730-737;
-    '*'-rules see it, other rules ignore it). The transformWithState
-    backend (engine.streaming_tws) arms restored timers natively where its
-    runtime is available.
+    '*'-rules see it, other rules ignore it).
 
-    ``prefilter_types`` is OFF by default, deliberately: Catalyst pushes an
-    event-type filter BELOW the EventTimeWatermark node, so events no rule
-    consumes would never advance the watermark and pending timeouts would
-    stall — but php-ec's clock advances on EVERY event
-    (CorrelationEngine.php:199). The default routes the full stream through
-    the watermark + state op (each event also replays due timeouts at
-    t−1 ms, exactly the batch clock). Enable prefiltering only when rule
-    types cover most traffic or timer latency is driven by other means —
-    it cuts the shuffle to the matched subset.
+    Every event goes through the watermark and the state op, including
+    types no rule consumes: php-ec's clock advances on EVERY event
+    (CorrelationEngine.php:199), and each event also replays due timeouts
+    at t−1 ms, exactly the batch clock.
     """
-    if not rules:
-        raise ValueError("correlate_stream needs at least one rule")
-    if clock not in ("event", "processing"):
-        # a typo here would otherwise pick event semantics on this
-        # backend but processing-time on the tws backend — fail loud
-        raise ValueError(
-            f"clock must be 'event' or 'processing', got {clock!r}"
-        )
-    check_unique_rule_names(rules)
+    key_col, group_rules = _single_key_group(rules, clock)
     unbounded = [
-        r.name for r in rules
+        r.name for r in group_rules
         if r.continuous and r.chain_limit is None and r.timeout_s is None
     ]
     if unbounded:
@@ -293,19 +345,6 @@ def correlate_stream(
             UserWarning,
             stacklevel=2,
         )
-    by_key: dict[Optional[str], list[Rule]] = {}
-    for r in rules:
-        by_key.setdefault(r.key, []).append(r)
-    if len(by_key) > 1:
-        # Spark allows only ONE applyInPandasWithState per streaming query
-        # (UnsupportedOperationChecker: "Multiple applyInPandasWithStates
-        # are not supported") — a union of stateful ops would fail at
-        # query.start(). Run one streaming query per key column instead.
-        raise ValueError(
-            "streaming rules must share one correlation key column per "
-            f"query (got {sorted(map(str, by_key))}); start a separate "
-            "correlate_stream/start_correlation per key column"
-        )
 
     restore_bc = None
     if initial_state is not None:
@@ -316,37 +355,10 @@ def correlate_stream(
         }
         restore_bc = events.sparkSession.sparkContext.broadcast(snap)
 
-    # exactly one key group survives the guard above
-    (key_col, group_rules), = by_key.items()
-    src = events.withWatermark("ts", watermark_delay)
-    needed_types = set()
-    unrestricted = False
-    for r in group_rules:
-        for g in r.events:
-            if EVENT_MATCH_ANY in g:
-                unrestricted = True
-            needed_types.update(g)
-    part = src
-    if prefilter_types and not unrestricted:
-        part = part.filter(F.col("event_type").isin(sorted(needed_types)))
-    cols = ["event_id", "ts", "event_type", "value"]
-    # group on the SPARK-cast string key (exactly what the batch
-    # engine and snapshot_state's __key use) so restore-blob lookup,
-    # emission keys, and payload callbacks agree across engines for
-    # every key type — str(True) is "True" but CAST(true AS STRING)
-    # is "true", and bool/decimal/timestamp keys would otherwise skip
-    # their restore silently. Aliasing also means a key that IS an
-    # engine column (e.g. event_type) never selects twice.
-    if key_col is not None:
-        part = part.select(
-            F.col(key_col).cast("string").alias("__key"), *cols
-        )
-    else:
-        part = part.select(F.lit("__all__").alias("__key"), *cols)
+    part = _key_projection(events.withWatermark("ts", watermark_delay), key_col)
     return part.groupBy("__key").applyInPandasWithState(
         _make_stateful_handler(
-            list(group_rules),
-            historical,
+            group_rules,
             clock,
             keyless=key_col is None,
             restore_bc=restore_bc,
@@ -361,3 +373,71 @@ def correlate_stream(
             else GroupStateTimeout.EventTimeTimeout
         ),
     )
+
+
+def snapshot_state(events: DataFrame, rules: Sequence[Rule]) -> DataFrame:
+    """Batch-replay history and return per-key serialized engine state
+    (``__key string, blob string``) WITHOUT the end-of-stream drain.
+
+    This is the save file of the reference's SaveHandler (FileAdapter.php:
+    73-233) computed from history: every in-flight instance (chain, group
+    index, pending deadline) survives, so feeding the result to
+    :func:`correlate_stream` as ``initial_state`` continues matching
+    exactly where the replay stopped — sequences half-matched in history
+    complete on live events; deadlines armed in history still fire.
+
+    Same physical shape as the batch engine: one shuffle on the key,
+    per-partition consecutive-key iteration, Arrow-batched. Keys come
+    from the same projection as the live stream's.
+
+    Replays every event, consumed type or not — the engine's clock
+    advances on EVERY event (CorrelationEngine.php:199). Dropping
+    unconsumed-type history would keep alive an instance whose deadline
+    expired after the key's last consumed-type event; the uninterrupted
+    engine fires-and-discards it during replay, so the snapshot must too —
+    otherwise the warm-started query re-emits a timeout history already
+    reported.
+    """
+    from ..session import shuffle_partitions
+
+    key_col, rules_list = _single_key_group(rules)
+    n_parts = shuffle_partitions(events.sparkSession)
+    part = _key_projection(events, key_col).repartition(
+        n_parts, "__key"
+    ).sortWithinPartitions("__key", "ts", "event_id")
+    keyless = key_col is None
+
+    def run(batches):
+        core: Optional[EngineCore] = None
+        cur_key = None
+        out_keys: list = []
+        out_blobs: list = []
+
+        def flush(c: EngineCore, k) -> None:
+            if c.has_live():
+                out_keys.append(k)
+                out_blobs.append(c.to_state())
+
+        for pdf in batches:
+            ts_ns = pdf["ts"].astype("int64").to_numpy()
+            eids = pdf["event_id"].to_numpy()
+            etypes = pdf["event_type"].to_numpy()
+            values = pdf["value"].to_numpy()
+            keys = pdf["__key"].to_numpy(dtype=object)
+            for i in range(len(pdf)):
+                k = keys[i]
+                if core is None or k != cur_key:
+                    if core is not None:
+                        flush(core, cur_key)
+                    core = EngineCore(rules_list, None if keyless else k)
+                    cur_key = k
+                v = values[i]
+                core.handle(
+                    (int(eids[i]), int(ts_ns[i]), etypes[i], None if v != v else v)
+                )
+                core.take_rows()  # snapshot wants state, not emissions
+        if core is not None:
+            flush(core, cur_key)
+        yield pd.DataFrame({"__key": out_keys, "blob": out_blobs})
+
+    return part.mapInPandas(run, schema=SNAPSHOT_SCHEMA)

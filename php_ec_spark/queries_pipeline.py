@@ -26,6 +26,7 @@ from .operators.dedup import (
     minhash_lsh_pairs,
     simhash_pairs,
 )
+from .operators.dedup_index import _pid_alive
 from .operators.lm import with_lm_bits
 from .operators.multimodal import attach_blob, extract_image_meta
 from .operators.similarity import cosine_dup_pairs, cosine_topk
@@ -964,16 +965,6 @@ def pipe_bpe_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: a repeat call searches the existing index with partition pruning and
 #: never re-scans/re-shuffles the corpus.
 _IVF_INDEX_CACHE: dict = {}
-
-
-def _pid_alive(pid: int) -> bool:
-    """True when ``pid`` names a live process — canonical definition
-    lives in dedup_index (the orphan-clear liveness guard needs it
-    below queries_pipeline in the import graph); re-exported here for
-    the tmp-dir sweeps."""
-    from .operators.dedup_index import _pid_alive as _impl
-
-    return _impl(pid)
 
 
 def sweep_stale_ivf_dirs() -> int:

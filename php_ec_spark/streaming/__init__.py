@@ -15,12 +15,19 @@ from __future__ import annotations
 
 import os
 from dataclasses import dataclass, field
+from functools import partial
 from typing import Callable, Optional, Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming import StreamingQuery
 
-from ..engine.streaming import correlate_stream
+from ..engine.streaming import (
+    SNAPSHOT_SCHEMA,
+    _group_rules,
+    _single_key_group,
+    correlate_stream,
+    snapshot_state,
+)
 from ..memory import MemoryHub
 from ..rules.base import Rule
 from .jsonrpc import JsonRpcActionProcess, JsonRpcProcessSource, jsonrpc_source
@@ -91,6 +98,7 @@ def start_correlation(
     concurrently with this call. On a restart from an existing
     checkpoint the pinned value wins regardless.
     """
+    _single_key_group(rules, clock)  # fail before memory.bind
     if memory is not None:
         memory.bind(checkpoint_dir)
     emissions = correlate_stream(
@@ -101,34 +109,60 @@ def start_correlation(
         initial_state=initial_state,
         memory_path=None if memory is None else memory.snapshot_path,
     )
+
+    def through_memory(
+        dispatcher: ActionDispatcher, df: DataFrame, batch_id: int
+    ) -> None:
+        # ONE parallel materialization serves both consumers — the
+        # dispatcher is told the frame is already checkpointed so it
+        # doesn't cache a second copy of every emission batch
+        ckpt = df.localCheckpoint(eager=True)
+        try:
+            dispatcher(ckpt, batch_id, pre_materialized=True)
+            memory.absorb(ckpt)  # writes land before batch N+1 reads
+        finally:
+            ckpt.unpersist()
+
+    return _start_query(
+        emissions, checkpoint_dir, dispatcher, query_name,
+        {"availableNow": True} if trigger_once else None, state_partitions,
+        sink=None if memory is None else through_memory,
+    )
+
+
+def _start_query(
+    emissions: DataFrame,
+    checkpoint_dir: str,
+    dispatcher: Optional[ActionDispatcher],
+    query_name: str,
+    trigger: Optional[dict],
+    state_partitions: Optional[int],
+    sink: Optional[Callable[[ActionDispatcher, DataFrame, int], None]] = None,
+) -> StreamingQuery:
+    """Wire the dispatcher (markers and errored-action journal under the
+    query checkpoint unless it has its own; replay errored actions) and
+    start the emission stream into it, through ``sink(dispatcher, df,
+    batch_id)`` when given.
+
+    ``state_partitions`` is set as ``spark.sql.shuffle.partitions`` around
+    ``start()`` only: the streaming query clones the session synchronously
+    inside start(), so the restored conf cannot race the first batch
+    plan."""
     dispatcher = dispatcher or ActionDispatcher()
     if dispatcher.checkpoint_dir is None:
         dispatcher.checkpoint_dir = checkpoint_dir
     dispatcher.replay_errored()
-    if memory is None:
-        sink = dispatcher
-    else:
-        def sink(df: DataFrame, batch_id: int) -> None:
-            # ONE parallel materialization serves both consumers — the
-            # dispatcher is told the frame is already checkpointed so it
-            # doesn't cache a second copy of every emission batch
-            ckpt = df.localCheckpoint(eager=True)
-            try:
-                dispatcher(ckpt, batch_id, pre_materialized=True)
-                memory.absorb(ckpt)  # writes land before batch N+1 reads
-            finally:
-                ckpt.unpersist()
     writer = (
         emissions.writeStream.queryName(query_name)
         .option("checkpointLocation", checkpoint_dir)
         .outputMode("append")
-        .foreachBatch(sink)
+        .foreachBatch(dispatcher if sink is None else partial(sink, dispatcher))
     )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
+    if trigger is not None:
+        writer = writer.trigger(**trigger)
     if state_partitions is None:
         return writer.start()
-    spark = events.sparkSession
+    spark = emissions.sparkSession
     prev = spark.conf.get("spark.sql.shuffle.partitions", None)
     spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
     try:
@@ -195,6 +229,7 @@ def start_chained_correlation(
     """
     from ..engine.chain import emissions_to_events
 
+    _single_key_group(rules, clock)  # fail before creating chain_dir
     os.makedirs(chain_dir, exist_ok=True)
     spark = events.sparkSession
     src = events.unionByName(
@@ -214,23 +249,18 @@ def start_chained_correlation(
             em, key_cols=key_cols, rule_index=rule_index
         )
 
-    dispatcher = dispatcher or ActionDispatcher()
-    if dispatcher.checkpoint_dir is None:
-        dispatcher.checkpoint_dir = checkpoint_dir
-    dispatcher.replay_errored()
-
-    def sink(df: DataFrame, batch_id: int) -> None:
+    def sink(dispatcher: ActionDispatcher, df: DataFrame, batch_id: int) -> None:
         df = df.localCheckpoint(eager=True)  # dispatch + re-render, one compute
         try:
-            _sink_inner(df, batch_id)
+            dispatcher(df, batch_id, pre_materialized=True)
+            _rechain(df, batch_id)
         finally:
             # explicit release: at a 500 ms trigger, relying on GC/
             # ContextCleaner lets checkpointed blocks pile up between
             # cycles (and an exception mid-sink would leak the batch)
             df.unpersist()
 
-    def _sink_inner(df: DataFrame, batch_id: int) -> None:
-        dispatcher(df, batch_id, pre_materialized=True)
+    def _rechain(df: DataFrame, batch_id: int) -> None:
         if df.isEmpty():  # JVM-side limit-1 probe on the checkpointed batch
             return  # no derived file — quiet batches leave the chain dir alone
         # Derived events re-enter executor-side: written as NDJSON part
@@ -270,31 +300,10 @@ def start_chained_correlation(
                 )
         shutil.rmtree(staging, ignore_errors=True)
 
-    writer = (
-        emissions.writeStream.queryName(query_name)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .foreachBatch(sink)
-        .trigger(processingTime=trigger_interval)
+    return _start_query(
+        emissions, checkpoint_dir, dispatcher, query_name,
+        {"processingTime": trigger_interval}, state_partitions, sink=sink,
     )
-    if state_partitions is None:
-        return writer.start()
-    # same safe window as start_correlation: the streaming query clones
-    # the session synchronously inside start(), so the restored conf
-    # cannot race the first batch plan
-    prev = spark.conf.get("spark.sql.shuffle.partitions", None)
-    spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-    try:
-        return writer.start()
-    finally:
-        if prev is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
-        else:
-            # RuntimeConfig.get(key, None) returns None when the conf was
-            # never EXPLICITLY set (the SQLConf default doesn't surface) —
-            # leaving our override in place would silently re-plan every
-            # later query in the session with state_partitions partitions
-            spark.conf.unset("spark.sql.shuffle.partitions")
 
 
 @dataclass
@@ -405,11 +414,12 @@ def start_correlations(
 
     from pyspark.sql import functions as F
 
-    from ..engine.streaming_tws import SNAPSHOT_SCHEMA, snapshot_state
     from ..model import CONTROL_MSG_RESTORED
 
     if history is not None and initial_states is not None:
         raise ValueError("pass history OR initial_states, not both")
+    # every argument check before the first job, spool write or bind
+    by_key = _group_rules(rules, clock)
 
     spark = events.sparkSession
     hist_max_iso: Optional[str] = kick_ts
@@ -420,17 +430,12 @@ def start_correlations(
             F.date_format(F.max("ts"), "yyyy-MM-dd'T'HH:mm:ss.SSSSSS'Z'")
         ).first()[0]
 
-    by_key_cols = {r.key for r in rules}
     if initial_states is not None:
-        stray = sorted(
-            str(k) for k in initial_states if k not in by_key_cols
-        )
+        stray = sorted(str(k) for k in initial_states if k not in by_key)
         if stray:
-            import warnings
-
             warnings.warn(
                 f"initial_states keys {stray} match no rule key column "
-                f"({sorted(map(str, by_key_cols))}) — those snapshots are "
+                f"({sorted(map(str, by_key))}) — those snapshots are "
                 "ignored and their keys cold-start",
                 UserWarning,
                 stacklevel=2,
@@ -481,9 +486,6 @@ def start_correlations(
         # one shared hub across the per-key queries: anchor the snapshot
         # at the root, not under the first query's subdir
         memory.bind(checkpoint_root)
-    by_key: dict[Optional[str], list[Rule]] = {}
-    for r in rules:
-        by_key.setdefault(r.key, []).append(r)
     group = CorrelationGroup()
     for key_col, group_rules in by_key.items():
         tag = key_col if key_col is not None else "__keyless__"

@@ -12,7 +12,7 @@ import datetime as dt
 
 import pytest
 
-from php_ec_spark.engine import correlate, correlate_state_machine, compile_two_step_sequence
+from php_ec_spark.engine import compile_sequence, correlate, correlate_state_machine
 from php_ec_spark.rules import Rule, match_single_continuously, sequence_rule
 
 
@@ -43,19 +43,19 @@ class TestSequenceTimeout:
         }
         return got
 
-    @pytest.mark.parametrize("runner", [correlate, compile_two_step_sequence])
+    @pytest.mark.parametrize("runner", [correlate, compile_sequence])
     def test_paid_within_timeout(self, spark, runner):
         rows = [(1, 0, 10, "placed", 5.0), (2, 10, 10, "paid", 7.0)]
         got = self._run(spark, rows, runner)
         assert got == {("10", 1): ("completed", _ts(10))}
 
-    @pytest.mark.parametrize("runner", [correlate, compile_two_step_sequence])
+    @pytest.mark.parametrize("runner", [correlate, compile_sequence])
     def test_never_paid_times_out(self, spark, runner):
         rows = [(1, 0, 10, "placed", 5.0), (2, 100, 10, "other", 1.0)]
         got = self._run(spark, rows, runner)
         assert got == {("10", 1): ("timeout", _ts(20))}
 
-    @pytest.mark.parametrize("runner", [correlate, compile_two_step_sequence])
+    @pytest.mark.parametrize("runner", [correlate, compile_sequence])
     def test_late_payment_is_timeout(self, spark, runner):
         # paid arrives 360s later (> PT20S): timeout fires at placed+20s;
         # the late 'paid' does NOT start a new matcher (not an initial event)
@@ -63,7 +63,7 @@ class TestSequenceTimeout:
         got = self._run(spark, rows, runner)
         assert got == {("10", 1): ("timeout", _ts(20))}
 
-    @pytest.mark.parametrize("runner", [correlate, compile_two_step_sequence])
+    @pytest.mark.parametrize("runner", [correlate, compile_sequence])
     def test_keys_are_independent(self, spark, runner):
         rows = [
             (1, 0, 10, "placed", 1.0),
@@ -76,7 +76,7 @@ class TestSequenceTimeout:
             ("11", 2): ("completed", _ts(5)),
         }
 
-    @pytest.mark.parametrize("runner", [correlate, compile_two_step_sequence])
+    @pytest.mark.parametrize("runner", [correlate, compile_sequence])
     def test_one_paid_completes_all_waiting_instances(self, spark, runner):
         # two placed for same key -> two instances; the single paid completes both
         rows = [
@@ -90,7 +90,7 @@ class TestSequenceTimeout:
             ("10", 2): ("completed", _ts(10)),
         }
 
-    @pytest.mark.parametrize("runner", [correlate, compile_two_step_sequence])
+    @pytest.mark.parametrize("runner", [correlate, compile_sequence])
     def test_boundary_exact_deadline_completes(self, spark, runner):
         # f.ts == deadline: acceptEventTime uses <= (AEventProcessor.php:357-396)
         rows = [(1, 0, 10, "placed", 1.0), (2, 20, 10, "paid", 2.0)]
@@ -182,7 +182,7 @@ class TestStrategyParity:
     @pytest.mark.parametrize("timeout", ["PT30M", "PT6H", None])
     def test_paths_agree_on_real_data(self, spark, events, timeout):
         rule = sequence_rule("r", ["signup", "purchase"], key="user_id", timeout=timeout)
-        fast = compile_two_step_sequence(events, rule)
+        fast = compile_sequence(events, rule)
         slow = correlate_state_machine(events, [rule])
         cols = ["key", "start_event_id", "outcome", "fire_ts", "last_event_id", "n_events"]
         a = sorted(map(tuple, fast.select(cols).collect()))
@@ -197,7 +197,7 @@ class TestEngineGuards:
         while correlate raised; now every public entry rejects them."""
         import datetime as dtm
 
-        from php_ec_spark.engine.streaming_tws import snapshot_state
+        from php_ec_spark.engine.streaming import snapshot_state
 
         rules = [
             match_single_continuously("x", ["a"], key="user_id"),
@@ -214,9 +214,8 @@ class TestEngineGuards:
             snapshot_state(ev, rules)
 
     def test_clock_value_validated(self, spark):
-        """The two streaming backends defaulted OPPOSITE ways on an
-        unrecognized clock value (event vs processing semantics) — a typo
-        now fails loud instead of silently mixing timer semantics."""
+        """An unrecognized clock value fails loud instead of silently
+        picking one of the two timer semantics."""
         from php_ec_spark.engine.streaming import correlate_stream
 
         rules = [sequence_rule("s", ["a", "b"], key="user_id", timeout="PT1M")]

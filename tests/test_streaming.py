@@ -934,3 +934,43 @@ def test_state_partitions_restores_unset_conf(spark, stream_dirs):
         assert spark.conf.get("spark.sql.shuffle.partitions", None) is None
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
+
+
+def test_bad_clock_rejected_before_memory_bind(spark, tmp_path):
+    """A mistyped clock fails before any side effect. MemoryHub.bind keeps
+    its first directory, so binding before the check would anchor learned
+    memory under the dead query's checkpoint: the corrected retry would
+    write there and its restart would start cold. start_correlations must
+    also fail before its snapshot jobs and kick spool writes."""
+    import datetime as dt
+    import os
+
+    from php_ec_spark.memory import MemoryHub
+    from php_ec_spark.streaming import start_correlations
+
+    src = tmp_path / "events"
+    src.mkdir()
+    _write_ndjson(src / "01.json", [_ev(0, "2024-01-01T00:00:00Z", 1, "signup")])
+    rules = [sequence_rule("pay", ["signup", "purchase"], key="user_id",
+                           timeout="PT1H")]
+    history = spark.createDataFrame(
+        [(1, dt.datetime(2024, 1, 1), 1, "signup", 1.0, None)],
+        "event_id long, ts timestamp, user_id long, event_type string, "
+        "value double, props string",
+    )
+    hub = MemoryHub()
+    with pytest.raises(ValueError, match="clock must be"):
+        start_correlation(ndjson_dir_source(spark, str(src)), rules,
+                          str(tmp_path / "dead"), memory=hub, clock="Event")
+    with pytest.raises(ValueError, match="clock must be"):
+        start_correlations(ndjson_dir_source(spark, str(src)), rules,
+                           str(tmp_path / "dead_root"), memory=hub,
+                           clock="Event", history=history)
+    assert hub.snapshot_path is None
+    assert not (tmp_path / "dead_root").exists()
+
+    ckpt = tmp_path / "ckpt"
+    q = start_correlation(ndjson_dir_source(spark, str(src)), rules,
+                          str(ckpt), memory=hub, trigger_once=True)
+    q.awaitTermination(timeout=120)
+    assert hub.snapshot_path.startswith(str(ckpt) + os.sep)

@@ -109,52 +109,62 @@ class TestSnapshotState:
         assert sum(len(v) for v in core.live.values()) == 3
 
 
+def _run_warm(spark, tmp_path, chunks, rules, snapshot, derive=lambda df: df):
+    """Write ``chunks`` as one NDJSON file each, run
+    ``correlate_stream(derive(source), rules, initial_state=snapshot)``
+    to completion one file per trigger, and return the emissions."""
+    src = tmp_path / f"live-{uuid.uuid4().hex[:8]}"
+    src.mkdir()
+    for i, chunk in enumerate(chunks):
+        with open(src / f"{i:02d}.json", "w") as f:
+            for r in chunk:
+                f.write(json.dumps(r) + "\n")
+        time.sleep(0.05)  # distinct mtimes → deterministic file order
+
+    emissions = correlate_stream(
+        derive(ndjson_dir_source(spark, str(src), max_files_per_trigger=1)),
+        rules,
+        initial_state=snapshot,
+    )
+    collected: list = []
+    q = (
+        emissions.writeStream
+        .option("checkpointLocation", str(tmp_path / "ck"))
+        .outputMode("append")
+        .foreachBatch(lambda df, _b: collected.extend(df.collect()))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(timeout=180)
+    return collected
+
+
+def _ev(eid, ts, etype, value, user=1):
+    return {"event_id": eid, "ts": ts, "user_id": user,
+            "event_type": etype, "value": value, "props": None}
+
+
+#: far-future event: its watermark passes every history-armed deadline
+_SENTINEL = [_ev(99, "2024-01-01T03:00:00Z", "zzz", 0.0)]
+
+
 class TestWarmStartStream:
     def test_stream_resumes_from_snapshot(self, spark, tmp_path):
         """Live stream seeded with the history snapshot: u1's half-matched
         sequence completes across the boundary; u2 (kicked by the in-band
         Restored control row, never matched again) times out at its
         history-armed deadline; u3 stays silent."""
-        snapshot = snapshot_state(_history_df(spark), RULES())
-
-        src = tmp_path / f"live-{uuid.uuid4().hex[:8]}"
-        src.mkdir()
         live = [
             # in-band restore kicks (Scheduler.php:730-737): touch every
             # restored key so pending deadlines get armed
-            {"event_id": -2, "ts": "2024-01-01T00:00:10Z", "user_id": 1,
-             "event_type": CONTROL_MSG_RESTORED, "value": None, "props": None},
-            {"event_id": -1, "ts": "2024-01-01T00:00:10Z", "user_id": 2,
-             "event_type": CONTROL_MSG_RESTORED, "value": None, "props": None},
-            {"event_id": 10, "ts": "2024-01-01T00:00:15Z", "user_id": 1,
-             "event_type": "b", "value": 5.0, "props": None},
+            _ev(-2, "2024-01-01T00:00:10Z", CONTROL_MSG_RESTORED, None),
+            _ev(-1, "2024-01-01T00:00:10Z", CONTROL_MSG_RESTORED, None, user=2),
+            _ev(10, "2024-01-01T00:00:15Z", "b", 5.0),
         ]
-        sentinel = [
-            {"event_id": 99, "ts": "2024-01-01T03:00:00Z", "user_id": 1,
-             "event_type": "zzz", "value": 0.0, "props": None},
-        ]
-        for i, chunk in enumerate((live, sentinel)):
-            with open(src / f"{i:02d}.json", "w") as f:
-                for r in chunk:
-                    f.write(json.dumps(r) + "\n")
-            time.sleep(0.05)  # distinct mtimes → deterministic file order
-
-        emissions = correlate_stream(
-            ndjson_dir_source(spark, str(src), max_files_per_trigger=1),
-            RULES(),
-            initial_state=snapshot,
+        collected = _run_warm(
+            spark, tmp_path, [live, _SENTINEL], RULES(),
+            snapshot_state(_history_df(spark), RULES()),
         )
-        collected: list = []
-        q = (
-            emissions.writeStream
-            .option("checkpointLocation", str(tmp_path / "ck"))
-            .outputMode("append")
-            .foreachBatch(lambda df, _b: collected.extend(df.collect()))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(timeout=180)
-
         got = sorted(
             (r["rule"], r["key"], r["outcome"], str(r["fire_ts"]),
              r["start_event_id"], r["last_event_id"], r["n_events"])
@@ -170,48 +180,51 @@ class TestWarmStartStream:
     def test_drained_restore_key_does_not_resurrect(self, spark, tmp_path):
         """After a restored key completes, later batches for that key must
         start FRESH instances — the broadcast snapshot may not re-apply."""
-        snapshot = snapshot_state(_history_df(spark), RULES())
-
-        src = tmp_path / f"live-{uuid.uuid4().hex[:8]}"
-        src.mkdir()
         chunks = [
             # completes the restored u1 instance → state drained
-            [{"event_id": 10, "ts": "2024-01-01T00:00:05Z", "user_id": 1,
-              "event_type": "b", "value": 5.0, "props": None}],
+            [_ev(10, "2024-01-01T00:00:05Z", "b", 5.0)],
             # were the snapshot re-applied, this b would complete a
             # resurrected chain; correct behavior: b alone starts nothing
-            [{"event_id": 11, "ts": "2024-01-01T00:00:08Z", "user_id": 1,
-              "event_type": "b", "value": 6.0, "props": None}],
-            [{"event_id": 99, "ts": "2024-01-01T03:00:00Z", "user_id": 1,
-              "event_type": "zzz", "value": 0.0, "props": None}],
+            [_ev(11, "2024-01-01T00:00:08Z", "b", 6.0)],
+            _SENTINEL,
         ]
-        for i, chunk in enumerate(chunks):
-            with open(src / f"{i:02d}.json", "w") as f:
-                for r in chunk:
-                    f.write(json.dumps(r) + "\n")
-            time.sleep(0.05)  # distinct mtimes → deterministic file order
-
-        emissions = correlate_stream(
-            ndjson_dir_source(spark, str(src), max_files_per_trigger=1),
-            RULES(),
-            initial_state=snapshot,
+        collected = _run_warm(
+            spark, tmp_path, chunks, RULES(),
+            snapshot_state(_history_df(spark), RULES()),
         )
-        collected: list = []
-        q = (
-            emissions.writeStream
-            .option("checkpointLocation", str(tmp_path / "ck"))
-            .outputMode("append")
-            .foreachBatch(lambda df, _b: collected.extend(df.collect()))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(timeout=180)
-
         u1 = sorted(
             (r["outcome"], r["start_event_id"], r["last_event_id"])
             for r in collected if r["key"] == "1"
         )
         assert u1 == [("completed", 1, 10)]
+
+    def test_boolean_key_resumes_from_snapshot(self, spark, tmp_path):
+        """A derived boolean key warm-starts: snapshot and stream share one
+        key projection, so history's key is CAST(true AS STRING) = "true"
+        on both sides (Python's str(True) would be "True" and the restore
+        would be skipped silently)."""
+        from pyspark.sql import functions as F
+
+        def big(df):
+            return df.withColumn("big", F.col("value") > 50)
+
+        rules = [sequence_rule("seq", ["a", "b"], key="big", timeout="PT20S")]
+        hist = _history_df(spark).filter("event_id = 1").withColumn(
+            "value", F.lit(80.0)
+        )
+        snapshot = snapshot_state(big(hist), rules)
+        assert [r["__key"] for r in snapshot.collect()] == ["true"]
+
+        collected = _run_warm(
+            spark, tmp_path, [[_ev(10, "2024-01-01T00:00:05Z", "b", 90.0)], _SENTINEL],
+            rules, snapshot, derive=big,
+        )
+        got = sorted(
+            (r["key"], r["outcome"], r["start_event_id"], r["last_event_id"])
+            for r in collected
+        )
+        # the chain STARTED IN HISTORY (event_id 1) completes on live b
+        assert got == [("true", "completed", 1, 10)]
 
 
 class TestSnapshotRoundtripFuzz:
@@ -395,27 +408,3 @@ class TestWarmStartBoundaryFuzz:
             assert got == self._expected(rules, hist, live, kicks, sentinel_ns)
 
         run()
-
-
-class TestTwsGate:
-    def test_tws_raises_cleanly_without_protobuf(self, spark):
-        """transformWithState needs protobuf; without it the entry must
-        fail fast with a pointer to the applyInPandasWithState path (when
-        protobuf IS present this test just asserts construction works)."""
-        import pytest
-
-        df = _history_df(spark)
-        try:
-            import google.protobuf  # noqa: F401
-
-            have_protobuf = True
-        except ImportError:
-            have_protobuf = False
-
-        from php_ec_spark.engine import correlate_stream_tws
-
-        if have_protobuf:
-            pytest.skip("protobuf present — gate not exercised; TWS parity "
-                        "runs in test_streaming_tws-capable environments")
-        with pytest.raises(RuntimeError, match="protobuf"):
-            correlate_stream_tws(df, RULES())

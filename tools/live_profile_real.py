@@ -3,6 +3,10 @@
 Wraps engine.streaming._make_stateful_handler with in-worker timing
 (first-call-in-task vs later calls) to separate per-task setup
 (closure unpickle, module import) from per-key handler work.
+
+Run from the repo root (workers import the package, so it must be on
+PYTHONPATH): ``PYTHONPATH=. SPARK_GRAFT_CPUS=4 python
+tools/live_profile_real.py <events> <partitions>...``
 """
 
 from __future__ import annotations
@@ -18,11 +22,11 @@ ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
 
 from pyspark.sql import SparkSession  # noqa: E402
-from pyspark.sql import functions as F  # noqa: E402
 
 from php_ec_spark.engine.batch import EMISSION_SCHEMA  # noqa: E402
 from php_ec_spark.engine.streaming import (  # noqa: E402
     STATE_SCHEMA,
+    _key_projection,
     _make_stateful_handler,
 )
 from php_ec_spark.rules import sequence_rule  # noqa: E402
@@ -76,15 +80,14 @@ def main():
             spool = os.path.join(work, f"spool_{parts}_{rep}")
             os.makedirs(spool, exist_ok=True)
             handler = timed(
-                _make_stateful_handler(rules, False, "event"), spool)
-            df = (
+                _make_stateful_handler(rules, clock="event"), spool)
+            df = _key_projection(
                 spark.readStream.schema(
                     "event_id long, ts timestamp, user_id long, "
                     "event_type string, value double, props string")
                 .json(src)
-                .withWatermark("ts", "1 hour")
-                .select(F.col("user_id").cast("string").alias("__key"),
-                        "event_id", "ts", "event_type", "value")
+                .withWatermark("ts", "1 hour"),
+                "user_id",
             )
             out = df.groupBy("__key").applyInPandasWithState(
                 handler, outputStructType=EMISSION_SCHEMA,
